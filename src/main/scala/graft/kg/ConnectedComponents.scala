@@ -52,9 +52,12 @@ object ConnectedComponents {
       driverSolveThreshold: Long = DriverSolveMaxEdges): (DataFrame, Int) = {
     import spark.implicits._
 
-    val cnt = edges.count()
-    if (cnt <= driverSolveThreshold) {
-      val es = edges.select($"src", $"dst").as[(Long, Long)].collect()
+    // ONE bounded action decides the path and fetches the edges: at most
+    // threshold + 1 rows ever reach the driver, and more than threshold
+    // means the distributed loop
+    val take = math.max(0L, math.min(driverSolveThreshold, Int.MaxValue - 1L) + 1L).toInt
+    val es = edges.select($"src", $"dst").limit(take).as[(Long, Long)].collect()
+    if (es.length <= driverSolveThreshold) {
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x

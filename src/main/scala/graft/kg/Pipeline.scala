@@ -148,39 +148,7 @@ object Pipeline {
   }
 
   // ------------------------------------------------------------ stage 3
-  /** Acronym↔expansion alias discovery: within a url, an acronym mention
-    * A links to a phrase mention P when initials(P) == A. Pure per-url
-    * logic (partition-local after the stage-1 repartition) followed by a
-    * global distinct — the alias table is tiny relative to mentions. */
-  def aliasEdges(spark: SparkSession, triples: Dataset[Triple]): DataFrame = {
-    import spark.implicits._
-    // project to (url, obj, kind) BEFORE the shuffle — context/surface
-    // columns are the bulk of a mention row and irrelevant here
-    val ents = triples.filter(t => t.pred == "mentionsEntity" &&
-        (t.kind == "acronym" || t.kind == "concept"))
-      .map(t => (t.url, t.obj, t.kind))
-    ents.groupByKey(_._1)
-      .flatMapGroups { (_, it) =>
-        val ms = it.toVector
-        val acronyms = ms.filter(_._3 == "acronym")
-        val phrases = ms.filter(_._3 == "concept")
-        for {
-          a <- acronyms
-          p <- phrases
-          if EntityLinking.initialsOf(p._2) == a._2
-        } yield (Py.lower(a._2), Py.lower(p._2))
-      }
-      .toDF("key_a", "key_b")
-      .distinct()
-  }
-
-  /** Normalize mentions to entity keys (lowercase surface). */
-  def linkedMentions(spark: SparkSession, triples: Dataset[Triple]): Dataset[LinkedMention] = {
-    import spark.implicits._
-    triples
-      .filter(_.pred == "mentionsEntity")
-      .map(t => LinkedMention(t.url, t.pred, Py.lower(t.obj), t.surface, t.kind, t.weight))
-  }
+  // entity linking: EntityLinking.resolve
 
   // ------------------------------------------------------------ stage 4
   /** Canonicalize entity keys: CC over alias edges; canonical name = the
@@ -228,9 +196,10 @@ object Pipeline {
     // for the new edges' structure, not for merges already resolved
     // (ConnectedComponents.incremental)
     //
-    // PERSISTED: the CC entry runs 2 actions on this plan (count +
-    // collect/loop-seed; the incremental path a 3rd via its
-    // touched-component probe), and the plan embeds the full
+    // PERSISTED: more than one action reads this plan — the CC entry's
+    // bounded collect, plus the distributed loop's symmetrize pass when
+    // the graph is over the driver budget and the incremental path's
+    // touched-component probe — and the plan embeds the full
     // MinHash-LSH name-blocking pipeline (~10 shuffle stages) — without
     // the persist every action replays it end to end (measured 5.6 s
     // per replay at sf0.1, the dominant cost of a streaming
@@ -456,12 +425,12 @@ object Pipeline {
       } else {
         val t0 = System.nanoTime()
         val resolved = EntityLinking.resolve(spark, triples)
-        // independent outputs sharing resolve's persisted pairs shuffle —
+        // independent outputs sharing resolve's persisted intermediates —
         // overlapped like the stage-1/2 and nodes/edges write pairs
         inParallel(Seq(
           () => writeStage(resolved.aliasEdges, aliasPath),
           () => ckWrite(resolved.linked.toDF(), "linked_mentions", linkedPath)))
-        resolved.unpersistCached() // exactly resolve's pairs persist
+        resolved.unpersistCached()
         metrics += (("entity_linking", -1L, (System.nanoTime() - t0) / 1000000L))
         (spark.read.parquet(aliasPath), ckRead("linked_mentions", linkedPath))
       }

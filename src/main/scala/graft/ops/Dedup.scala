@@ -441,9 +441,23 @@ object Dedup {
     * are equivalent whenever ids are unique, which every caller's input
     * guarantees. */
   def charShingles(df: DataFrame, id: String, text: String, n: Int = 8): DataFrame =
-    df.select(col(id), explode(array_distinct(expr(
-      s"transform(sequence(1, greatest(0, length($text) - ${n - 1})), i -> substring($text, i, $n))")))
-      .as("shingle"))
+    df.select(col(id), explode(shingleArray(text, n)).as("shingle"))
+
+  /** The distinct char n-gram shingles of column `text` as one array per
+    * row — `charShingles` before the explode. For texts shorter than n
+    * the whole text is the single shingle. */
+  def shingleArray(text: String, n: Int): Column =
+    array_distinct(expr(
+      s"transform(sequence(1, greatest(0, length($text) - ${n - 1})), i -> substring($text, i, $n))"))
+
+  /** Exact Jaccard of two distinct-element arrays (e.g. two
+    * `shingleArray`s), rounded to 4 places like `jaccardVerify`, but
+    * comparing the elements themselves rather than a 64-bit hash of
+    * them. */
+  def arrayJaccard(a: Column, b: Column): Column = {
+    val inter = size(array_intersect(a, b))
+    round(inter / (size(a) + size(b) - inter), 4)
+  }
 
   /** Asymmetric CONTAINMENT pairs — c(A⊂B) = |shingles(A)∩shingles(B)| /
     * |shingles(A)| — the syndication/quoting detector symmetric Jaccard

@@ -203,6 +203,23 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("BroadcastNestedLoopJoin"), s"blocking degenerated to NL join:\n$p")
   }
 
+  test("linking scans triples without the context column, filter pushed down") {
+    import graft.kg.{EntityLinking, PagesGen, Pipeline}
+    val dir = java.nio.file.Files.createTempDirectory("link_scan").toString + "/triples"
+    Pipeline.triplesFromPages(spark, PagesGen.pages(spark, 20L)).write.parquet(dir)
+    val resolved = EntityLinking.resolve(spark,
+      spark.read.parquet(dir).as[graft.kg.Schema.Triple])
+    try {
+      val p = plan(resolved.linked.toDF()) + plan(resolved.aliasEdges)
+      val schemas = "ReadSchema: struct<[^\n]*".r.findAllIn(p).toSeq
+      assert(schemas.nonEmpty, s"no parquet scan under linking:\n$p")
+      assert(schemas.forall(!_.contains("context")),
+        s"linking reads the context column:\n${schemas.mkString("\n")}")
+      assert(p.contains("PushedFilters: [In(pred, [hasKeyword,mentionsEntity])"),
+        s"the pred filter must reach the scan:\n$p")
+    } finally resolved.unpersistCached()
+  }
+
   test("sequence packing shuffles once (the shard exchange) and never globally sorts") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val p = plan(graft.ops.Packing.packSequences(docs, "doc_id", "text", 1024L, 8))

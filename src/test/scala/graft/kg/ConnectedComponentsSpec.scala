@@ -49,6 +49,22 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(cc(Seq.empty).isEmpty)
   }
 
+  test("driver budget boundary: |E| edges solve on the driver, |E| - 1 runs the loop, same labels") {
+    // several partitions, so the bounded collect has to read past the first
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 3L), (7L, 8L), (9L, 7L))
+      .toDF("src", "dst").repartition(3)
+    val n = 5L
+    val (atBudget, driverRounds) =
+      ConnectedComponents.runWithStats(spark, edges, driverSolveThreshold = n)
+    val (overBudget, loopRounds) =
+      ConnectedComponents.runWithStats(spark, edges, driverSolveThreshold = n - 1)
+    assert(driverRounds == 0, "threshold = |E| must take the driver path")
+    assert(loopRounds > 0, "threshold = |E| - 1 must take the distributed loop")
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L, 9L -> 7L)
+    assert(atBudget.as[(Long, Long)].collect().toMap == want)
+    assert(overBudget.as[(Long, Long)].collect().toMap == want)
+  }
+
   test("incremental CC: seeded delta == full rebuild, rounds collapse") {
     // history: two resolved 256-chains; delta: one bridge edge
     def chain(base: Long): Seq[(Long, Long)] =

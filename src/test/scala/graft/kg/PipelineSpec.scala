@@ -123,6 +123,21 @@ class PipelineSpec extends AnyFunSuite {
     assert(nodes1 == nodes2)
   }
 
+  test("a build leaves no cached data behind, fresh and resumed") {
+    // this test owns the session's cache state
+    spark.catalog.clearCache()
+    val dir = Files.createTempDirectory("kgcache").toString
+    val cfg = Pipeline.Config(dir, nPartitions = 4)
+    Pipeline.run(spark, PagesGen.pages(spark, 40L), cfg.copy(resume = false))
+    assert(TestSpark.cacheIsEmpty, "a fresh build left cached data")
+    // the relink path: extraction resumes from its checkpoints, linking
+    // and canonicalization rerun
+    for (s <- Seq("alias_edges", "linked_mentions", "nodes", "edges"))
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/$s"))
+    Pipeline.run(spark, PagesGen.pages(spark, 40L), cfg)
+    assert(TestSpark.cacheIsEmpty, "a resumed build left cached data")
+  }
+
   test("bucketed-layout build: identical results, exchange-free per-url consumption") {
     val dir = Files.createTempDirectory("kgbkt").toString
     val stages = Seq("extract_clean", "triples", "linked_mentions", "nodes", "edges")

@@ -133,7 +133,9 @@ class StreamingSpec extends AnyFunSuite {
     val pages = spark.readStream.schema(StreamingPipeline.pageSchema)
       .option("maxFilesPerTrigger", 1).parquet(dir).as[Schema.Page]
     val work = Files.createTempDirectory("kginc").toString
+    spark.catalog.clearCache() // this test owns the session's cache state
     StreamingPipeline.runIncremental(spark, pages, work, recanonEvery = 2)
+    assert(TestSpark.cacheIsEmpty, "the incremental folds left cached data")
 
     val batchDir = Files.createTempDirectory("kgincb").toString
     val batchRes = Pipeline.run(spark, PagesGen.pages(spark, nDocs),

@@ -16,4 +16,8 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** True when no Dataset is cached in the session's cache manager. */
+  def cacheIsEmpty: Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager.isEmpty
 }
